@@ -161,6 +161,9 @@ def recursive_bisection(
     if coords_aligned:
         root_lat = np.asarray(lat_by_vertex, dtype=np.float64)
         root_lon = np.asarray(lon_by_vertex, dtype=np.float64)
+        assert len(root_lat) == len(root_lon) == len(vertex_ids), (
+            "coords_aligned coordinates must have one entry per vertex id"
+        )
     elif isinstance(lat_by_vertex, dict):
         root_lat = np.array(
             [lat_by_vertex[int(v)] for v in vertex_ids], dtype=np.float64
@@ -274,7 +277,8 @@ def recursive_bisection(
             recorded.sort(key=lambda t: (t[0], t[1]))
             result.stats.extend(s for _, _, s in recorded)
         finally:
-            pool.shutdown(wait=False)
+            # on a raise, drop the queued cells instead of bisecting them
+            pool.shutdown(wait=False, cancel_futures=True)
     else:
         rnd = 0
         while active:

@@ -60,6 +60,7 @@ from ..config import PartitionConfig
 from ..kernel.bisection import bisect_once, recursive_bisection
 from ..kernel.inertial import direction_jobs
 from ..kernel.maxflow import FlowGraph, min_cut
+from ..session import local_frame
 
 KERNEL_OUT_SCHEMA = (
     "root long, parent_path long, path long, vertex_id long, "
@@ -127,6 +128,12 @@ PROMOTE_ENABLED = os.environ.get("TILER_FINISH_PROMOTE", "1") != "0"
 #: Never promotes a cell that could stress executor memory: 2.5x the
 #: 64k threshold is ~16% of the 2^20-vertex per-executor design bound.
 PROMOTE_CAP = float(os.environ.get("TILER_PROMOTE_CAP", "2.5"))
+
+
+#: ``_exclusive_cumsum_by_key`` prefix-sums a frame the caller bounds at
+#: this many rows with one driver collect instead of the two-phase
+#: range-partitioned pass (a few MB of driver rows at most).
+BOUNDED_PREFIX_SUM_ROWS = 65536
 
 
 def _sorted_cell_arrays(vdf: pd.DataFrame, edf: pd.DataFrame):
@@ -543,7 +550,7 @@ def _exclusive_cumsum_by_key(
     prefix-sum a handful of rows (round-6 gap profiling). Identical
     offsets: ascending-``key`` order either way."""
     spark = df.sparkSession
-    if n_rows_hint is not None and n_rows_hint <= 65536:
+    if n_rows_hint is not None and n_rows_hint <= BOUNDED_PREFIX_SUM_ROWS:
         rows = sorted(df.collect(), key=lambda r: r[key])
         acc, out_rows = 0, []
         for r in rows:
@@ -557,7 +564,8 @@ def _exclusive_cumsum_by_key(
             df.schema.fields + [StructField(out_col, LongType(), False)]
         )
         out = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [tuple(d[f.name] for f in schema.fields) for d in out_rows],
                 schema,
             )
@@ -580,8 +588,10 @@ def _exclusive_cumsum_by_key(
     if not offs:
         return part.withColumn(out_col, F.lit(0).cast("long")).drop("pid"), 0
     off_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offs.items()], "pid int, pidoff long"
+        local_frame(
+            spark,
+            [(int(p), int(o)) for p, o in offs.items()],
+            "pid int, pidoff long",
         )
     )
     w = (
@@ -647,7 +657,7 @@ def _run_level(
         "empties": EMPTIES_SCHEMA,
         "metrics": METRICS_SCHEMA,
     }
-    empties_df = spark.createDataFrame([], EMPTIES_SCHEMA)
+    empties_df = local_frame(spark, [], EMPTIES_SCHEMA)
     level_metric_frames: list[DataFrame] = []
     level_unpersist: list[DataFrame] = []
     rnd = 0
@@ -693,9 +703,11 @@ def _run_level(
                 small_rows, big_rows = act_rows, []
             n_big = len(big_rows)
             n_small = len(small_rows)
-            active = spark.createDataFrame(act_rows, SIZES_SCHEMA)
-            small_df = spark.createDataFrame(small_rows, SIZES_SCHEMA) if small_rows else None
-            big_df = spark.createDataFrame(big_rows, SIZES_SCHEMA) if big_rows else None
+            active = local_frame(spark, act_rows, SIZES_SCHEMA)
+            small_df = (
+                local_frame(spark, small_rows, SIZES_SCHEMA) if small_rows else None
+            )
+            big_df = local_frame(spark, big_rows, SIZES_SCHEMA) if big_rows else None
         else:
             active = (
                 sizes_df  # round 0: every parent cell, any size
@@ -853,7 +865,7 @@ def _run_level(
                 big_sizes = {(int(r[0]), int(r[1])): int(r[2]) for r in big_rows}
                 big_keys = list(big_sizes)
                 kdf = F.broadcast(
-                    spark.createDataFrame(big_keys, "root long, path long")
+                    local_frame(spark, big_keys, "root long, path long")
                 )
                 act = assign.join(kdf, ["root", "path"], "inner")
                 e_act = _label_edges(edges, act)
@@ -883,7 +895,8 @@ def _run_level(
 
                 # per-cell totals for the argmin's balance term
                 ksrc = F.broadcast(
-                    spark.createDataFrame(
+                    local_frame(
+                        spark,
                         [(r, p, s) for (r, p), s in big_sizes.items()],
                         "root long, path long, n long",
                     )
@@ -1008,7 +1021,8 @@ def _run_level(
                             flush=True,
                         )
                     wdf = F.broadcast(
-                        spark.createDataFrame(
+                        local_frame(
+                            spark,
                             [(int(r["root"]), int(r["path"]), int(r["job"])) for r in wrows],
                             "root long, path long, job int",
                         )
@@ -1034,11 +1048,13 @@ def _run_level(
                     mrows, srows, erows = _direction_control_rows(
                         wrows, level, rnd, max_cell_size
                     )
-                    metric_parts.append(spark.createDataFrame(mrows, METRICS_SCHEMA))
+                    metric_parts.append(local_frame(spark, mrows, METRICS_SCHEMA))
                     if srows:
-                        sizes_frames.append(spark.createDataFrame(srows, SIZES_SCHEMA))
+                        sizes_frames.append(local_frame(spark, srows, SIZES_SCHEMA))
                     if erows:
-                        empties_frames.append(spark.createDataFrame(erows, EMPTIES_SCHEMA))
+                        empties_frames.append(
+                            local_frame(spark, erows, EMPTIES_SCHEMA)
+                        )
             else:
                 run_cell_mode(big_df, _make_bisect_kernel(rate), True)
 
@@ -1048,7 +1064,7 @@ def _run_level(
         new_sizes = (
             sizes_frames[0]
             if sizes_frames
-            else spark.createDataFrame([], SIZES_SCHEMA)
+            else local_frame(spark, [], SIZES_SCHEMA)
         )
         for fr in sizes_frames[1:]:
             new_sizes = new_sizes.unionByName(fr)
@@ -1058,7 +1074,7 @@ def _run_level(
         round_metrics = (
             metric_parts[0]
             if metric_parts
-            else spark.createDataFrame([], METRICS_SCHEMA)
+            else local_frame(spark, [], METRICS_SCHEMA)
         )
         for fr in metric_parts[1:]:
             round_metrics = round_metrics.unionByName(fr)
@@ -1103,15 +1119,15 @@ def _run_level(
                     wrows, level, rnd, max_cell_size
                 )
                 level_metric_frames.append(
-                    spark.createDataFrame(mrows, METRICS_SCHEMA)
+                    local_frame(spark, mrows, METRICS_SCHEMA)
                 )
                 if srows:
                     new_sizes = new_sizes.unionByName(
-                        spark.createDataFrame(srows, SIZES_SCHEMA)
+                        local_frame(spark, srows, SIZES_SCHEMA)
                     )
                 if erows:
                     new_empties = new_empties.unionByName(
-                        spark.createDataFrame(erows, EMPTIES_SCHEMA)
+                        local_frame(spark, erows, EMPTIES_SCHEMA)
                     )
                 if os.environ.get("TILER_DEBUG"):
                     print(
@@ -1302,14 +1318,14 @@ def multilevel_partition(
 
     top_u = cell_sizes[L - 1]
     if n > top_u:
-        sizes0 = spark.createDataFrame([(0, 1, n)], SIZES_SCHEMA)
+        sizes0 = local_frame(spark, [(0, 1, n)], SIZES_SCHEMA)
         a, empties_df = _run_level(
             assign, edges, top_u, rate, local_recursion_threshold, L - 1,
             metrics_frames, sizes0, checkpoint, sizes_rows=[(0, 1, n)],
         )
         _t = time.time()
         labeled, c, empty_cells, level_sizes = _relabel_level(
-            a, empties_df, spark.createDataFrame([], "root long"),
+            a, empties_df, local_frame(spark, [], "root long"),
             n_roots_hint=1,  # the top level enters with the single root 0
         )
         if os.environ.get("TILER_DEBUG"):
@@ -1320,8 +1336,8 @@ def multilevel_partition(
             "vertex_id", "lat", "lon", F.lit(0).cast("long").alias("cell_id")
         )
         c = 1
-        empty_cells = spark.createDataFrame([], "root long")
-        level_sizes = spark.createDataFrame([(0, 1, n)], SIZES_SCHEMA)
+        empty_cells = local_frame(spark, [], "root long")
+        level_sizes = local_frame(spark, [(0, 1, n)], SIZES_SCHEMA)
         mx_bound = n  # the single top cell holds exactly n vertices
     num_cells[L - 1] = c
     level_frames.append(
@@ -1465,7 +1481,7 @@ def multilevel_partition(
     metrics = (
         metrics_frames[0]
         if metrics_frames
-        else spark.createDataFrame([], METRICS_SCHEMA)
+        else local_frame(spark, [], METRICS_SCHEMA)
     )
     for fr in metrics_frames[1:]:
         metrics = metrics.unionByName(fr)

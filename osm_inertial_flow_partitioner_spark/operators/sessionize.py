@@ -17,10 +17,16 @@ from pyspark.sql import functions as F
 
 def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """(user_id, event_id, ts, session_id) with session_id = cumulative
-    count of gaps > gap_minutes per user (0-based), deterministic."""
+    count of gaps > gap_minutes per user (0-based), deterministic.
+
+    Gaps compare full microsecond timestamps: a gap of 1800.5 s opens a
+    new 30-minute session even though its whole seconds differ by 1800."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("timestamp").cast("long") - F.lag(F.col("ts").cast("timestamp").cast("long"), 1).over(w)
-    is_new = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    gap = us - F.lag(us, 1).over(w)
+    is_new = F.when(
+        gap.isNull() | (gap > gap_minutes * 60 * 1_000_000), 1
+    ).otherwise(0)
     return (
         events.withColumn("is_new", is_new)
         .withColumn(

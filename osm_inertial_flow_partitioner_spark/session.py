@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -81,3 +82,29 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver-built literal rows as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` is a ``LogicalRDD`` over
+    ``parallelize``: every scan of it starts one Python-worker task per
+    core, even for zero rows. An Arrow table takes PySpark's
+    ``LocalRelation`` path instead, so collecting the frame runs no Spark
+    job and broadcasting or joining it starts no Python worker. ``rows``
+    are tuples in ``schema`` field order; column types and nullability
+    are exactly ``schema``'s."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [() for _ in schema.fields]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -90,6 +90,8 @@ def run_stream_to_staging(
 SESSION_OUT_SCHEMA = (
     "user_id long, session_id long, start_ts long, end_ts long, n_events long"
 )
+#: event times in state (start, last, buf) are epoch microseconds; the
+#: emitted start_ts/end_ts are whole seconds, floored
 SESSION_STATE_SCHEMA = "start long, last long, sid long, n long, buf array<long>"
 
 
@@ -99,6 +101,13 @@ def _make_session_fn(gap_sec: int, state_ttl_sec: int):
     import pandas as pd
 
     cols = ["user_id", "session_id", "start_ts", "end_ts", "n_events"]
+    # the gap test compares microseconds, as the batch twin does; the
+    # emitted times and the watermark-complete close stay in whole
+    # seconds, floored like Spark's timestamp -> long cast
+    gap_us = gap_sec * 1_000_000
+
+    def sec(us: int) -> int:
+        return us // 1_000_000
 
     def fn(key, pdf_iter, state):
         user_id = int(key[0])
@@ -107,7 +116,7 @@ def _make_session_fn(gap_sec: int, state_ttl_sec: int):
         new_ts: list[int] = []
         if not state.hasTimedOut:
             for pdf in pdf_iter:
-                new_ts.extend(int(x) for x in pdf["ts_long"])
+                new_ts.extend(int(x) for x in pdf["ts_us"])
         if state.exists:
             start, last, sid, n, buf = state.get
             buf = sorted(list(buf) + new_ts)
@@ -126,12 +135,12 @@ def _make_session_fn(gap_sec: int, state_ttl_sec: int):
         # finalized prefix can never change — this is what makes the
         # result independent of micro-batch arrival order. Later events
         # stay buffered in state until the watermark passes them.
-        cut = bisect.bisect_left(buf, wm)
+        cut = bisect.bisect_left(buf, wm * 1_000_000)
         safe, buf = buf[:cut], buf[cut:]
         for t in safe:
-            if last is None or t - last > gap_sec:
+            if last is None or t - last > gap_us:
                 if last is not None:
-                    out.append((user_id, sid, start, last, n))
+                    out.append((user_id, sid, sec(start), sec(last), n))
                 sid += 1
                 start = t
                 n = 0
@@ -145,24 +154,24 @@ def _make_session_fn(gap_sec: int, state_ttl_sec: int):
             # same strict predicate). Successor-closed sessions above
             # satisfy end + gap < t_next < wm automatically, so the
             # emitted set is exactly {batch sessions: end + gap < wm}.
-            if last + gap_sec < wm:
-                out.append((user_id, sid, start, last, n))
+            if sec(last) + gap_sec < wm:
+                out.append((user_id, sid, sec(start), sec(last), n))
                 start = last = None
                 n = 0
         if last is not None:  # open (not-yet-provably-complete) session
             state.update((start, last, sid, n, buf))
-            wake_ms = (last + gap_sec) * 1000
+            wake_ms = (sec(last) + gap_sec) * 1000
             if buf:
-                wake_ms = min(wake_ms, buf[0] * 1000)
+                wake_ms = min(wake_ms, sec(buf[0]) * 1000)
             state.setTimeoutTimestamp(max(wake_ms, wm_ms + 1))
         elif buf:  # only buffered future events; wake when wm passes one
             state.update((-1, anchor if anchor is not None else buf[0], sid, 0, buf))
-            state.setTimeoutTimestamp(max(buf[0] * 1000, wm_ms + 1))
+            state.setTimeoutTimestamp(max(sec(buf[0]) * 1000, wm_ms + 1))
         elif sid >= 0 and anchor is not None:
             # sentinel: keep the per-user session counter so numbering
             # stays monotone across flushes; expires after
             # state_ttl_sec of event-time inactivity — bounded state
-            ttl_ms = (anchor + gap_sec + state_ttl_sec) * 1000
+            ttl_ms = (sec(anchor) + gap_sec + state_ttl_sec) * 1000
             if ttl_ms <= wm_ms:
                 state.remove()
             else:
@@ -206,7 +215,7 @@ def streaming_sessionize(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     ev = events_stream.withWatermark("ts", watermark).select(
-        "user_id", F.col("ts").cast("timestamp").cast("long").alias("ts_long"),
+        "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         F.col("ts"),
     )
     return ev.groupBy("user_id").applyInPandasWithState(

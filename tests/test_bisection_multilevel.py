@@ -39,7 +39,7 @@ def test_recursive_bisection_dag_pool_matches_serial():
     when the compiled kernel exists) must reproduce the serial loop's
     cells AND stats sequence exactly — the round-6 restructure reorders
     execution, never results. Also pins the aligned-coords fast path
-    against the dict path."""
+    against the dict path, with or without the compiled kernel."""
     from osm_inertial_flow_partitioner_spark.kernel import cdinic
 
     v, e = road_like_graph(40_000, seed=23)
@@ -47,16 +47,22 @@ def test_recursive_bisection_dag_pool_matches_serial():
     serial = recursive_bisection(
         ids, v["lat"], v["lon"], e["tail"], e["head"], 2048, pool_workers=1
     )
-    pooled = recursive_bisection(
-        ids, v["lat"], v["lon"], e["tail"], e["head"], 2048, pool_workers=8
-    )
-    aligned = recursive_bisection(
-        ids, v["lat"][ids], v["lon"][ids], e["tail"], e["head"], 2048,
-        pool_workers=8, coords_aligned=True,
-    )
-    if not cdinic.available():  # pool never engages without the C kernel
-        pytest.skip("compiled kernel unavailable; pool path inert")
-    for other in (pooled, aligned):
+    others = [
+        recursive_bisection(
+            ids, v["lat"][ids], v["lon"][ids], e["tail"], e["head"], 2048,
+            pool_workers=8, coords_aligned=True,
+        )
+    ]
+    # the pool never engages without the C kernel: skip the pooled run
+    # there rather than paying a second serial numpy bisection
+    if cdinic.available():
+        others.append(
+            recursive_bisection(
+                ids, v["lat"], v["lon"], e["tail"], e["head"], 2048,
+                pool_workers=8,
+            )
+        )
+    for other in others:
         assert len(other.cells) == len(serial.cells)
         for a, b in zip(serial.cells, other.cells):
             assert np.array_equal(a, b)
@@ -67,6 +73,27 @@ def test_recursive_bisection_dag_pool_matches_serial():
             (s.n, s.cut_edges, s.part_two, s.best_job, s.round)
             for s in serial.stats
         ]
+
+
+def test_aligned_coords_must_match_vertex_count():
+    """``coords_aligned=True`` trusts positional coordinates, so a length
+    mismatch fails fast instead of bisecting on shifted coordinates."""
+    from osm_inertial_flow_partitioner_spark.kernel.multilevel import (
+        multilevel_finish_local,
+    )
+
+    v, e = unit_square_grid(4)
+    short_lat = v["lat"][:-1]
+    with pytest.raises(AssertionError):
+        recursive_bisection(
+            v["ids"], short_lat, v["lon"], e["tail"], e["head"], 8,
+            coords_aligned=True,
+        )
+    with pytest.raises(AssertionError):
+        multilevel_finish_local(
+            v["ids"], short_lat, v["lon"], e["tail"], e["head"], [8],
+            coords_aligned=True,
+        )
 
 
 def test_recursive_bisection_rejects_nonterminating_config():

@@ -101,3 +101,46 @@ def test_metrics_lineage_present(spark):
     assert len(m) >= 1
     cols = set(metrics.columns)
     assert {"level", "round", "root", "parent_path", "n", "cut_edges", "part_two"} <= cols
+
+
+def test_bounded_prefix_sum_matches_two_phase(spark):
+    """``_exclusive_cumsum_by_key`` has two paths: one driver collect when
+    the caller bounds the row count, the two-phase range-partitioned pass
+    otherwise. On the same roots frame both give identical offsets and
+    totals: the exclusive prefix sum in ascending root order."""
+    import random
+
+    from osm_inertial_flow_partitioner_spark.operators.partitioner import (
+        BOUNDED_PREFIX_SUM_ROWS,
+        _exclusive_cumsum_by_key,
+    )
+
+    rng = random.Random(5)
+    root_ids = rng.sample(range(10_000), 40)
+    rows = [(r, rng.choice([0, 1, 2, 7, 300])) for r in root_ids]
+    roots = spark.createDataFrame(rows, "root long, total long").repartition(3)
+
+    bounded, b_total = _exclusive_cumsum_by_key(
+        roots, "root", "total", "offset", n_rows_hint=len(rows)
+    )
+    phased, p_total = _exclusive_cumsum_by_key(
+        roots, "root", "total", "offset",
+        n_rows_hint=BOUNDED_PREFIX_SUM_ROWS + 1,  # past the bound
+    )
+
+    def root_node(df):
+        return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+
+    assert root_node(bounded) == "LocalRelation"
+    assert root_node(phased) != "LocalRelation"  # the range-partitioned pass
+
+    expected, acc = {}, 0
+    for r, t in sorted(rows):
+        expected[r] = acc
+        acc += t
+    assert b_total == p_total == acc
+    cols = ["root", "total", "offset"]
+    got_b = {r["root"]: tuple(r) for r in bounded.select(cols).collect()}
+    got_p = {r["root"]: tuple(r) for r in phased.select(cols).collect()}
+    assert got_b == got_p
+    assert {r: v[2] for r, v in got_b.items()} == expected

@@ -295,3 +295,47 @@ def test_streaming_sessionize_out_of_order_batches(spark, tmp_path):
     expected = {k: v for k, v in agg.items() if v[1] + 30 * 60 < watermark}
     assert expected, "fixture must close at least one session"
     assert got == expected
+
+
+def test_sessionize_fractional_second_gap(spark, tmp_path):
+    """The gap test compares microseconds, as the DuckDB oracle's
+    fractional ``epoch(ts)`` does: events at t=0.2 s and t=1800.7 s are
+    1800.5 s apart, so they open two sessions although their whole
+    seconds differ by exactly 1800. Holds in batch and in the streaming
+    twin; a third event at t=10000 s moves the watermark past both."""
+    import pandas as pd
+
+    from osm_inertial_flow_partitioner_spark.operators.sessionize import sessionize
+    from osm_inertial_flow_partitioner_spark.streaming.incremental import (
+        streaming_sessionize,
+    )
+
+    base = pd.Timestamp("2024-01-01 00:00:00")
+    schema = "event_id long, ts timestamp, user_id long"
+    rows = [
+        (eid, (base + pd.Timedelta(seconds=s)).to_pydatetime(), 7)
+        for eid, s in enumerate((0.2, 1800.7, 10000.0))
+    ]
+    events = spark.createDataFrame(rows, schema)
+    batch = sessionize(events, gap_minutes=30).orderBy("event_id").collect()
+    assert [r["session_id"] for r in batch] == [0, 1, 2]
+
+    src = str(tmp_path / "frac_src")
+    events.coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = (
+        streaming_sessionize(stream, gap_minutes=30, watermark="1 hour")
+        .writeStream.format("memory")
+        .queryName("sess_frac")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    got = sorted(
+        (r["session_id"], r["start_ts"], r["end_ts"], r["n_events"])
+        for r in spark.sql("SELECT * FROM sess_frac").collect()
+    )
+    t0 = int(batch[0]["ts"].timestamp())  # floor of t=0.2 s
+    # whole-second start/end stay floored, as the oracles require
+    assert got == [(0, t0, t0, 1), (1, t0 + 1800, t0 + 1800, 1)]
