@@ -1,4 +1,4 @@
-"""Compiled (C, via ctypes) Dinic max-flow kernel — optional fast path.
+"""Compiled (C, via ctypes) Dinic max-flow kernel — the production engine.
 
 The numpy/Python hybrid engines in ``maxflow.py`` pay per-BFS-level
 numpy dispatch overhead and per-arc Python interpretation in their hot
@@ -20,9 +20,10 @@ pinned by tests (``tests/test_kernel_maxflow.py``,
 
 Build discipline: the C source below is compiled ONCE per machine into
 a content-hashed shared object under the system temp dir (atomic
-rename, so concurrent Python workers race safely). Any failure —
-no compiler, sandboxed tmp, dlopen error — degrades silently to
-``available() == False`` and the numpy engines; nothing hard-fails.
+rename, so concurrent Python workers race safely). A failure — no
+compiler, sandboxed tmp, dlopen error — makes ``available()`` False and
+``maxflow.min_cut`` takes the numpy fallback, about 20x slower end to
+end; each process warns once with the cause. Nothing hard-fails.
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ import hashlib
 import os
 import subprocess
 import tempfile
+import warnings
 
 import numpy as np
 
@@ -40,90 +42,6 @@ _SRC = r"""
 #include <stdlib.h>
 
 typedef int64_t i64;
-
-/* BFS levels on the residual graph. level: -1 = unreachable. */
-static int bfs(i64 n, const i64 *ev, const i64 *ecap, const i64 *eflow,
-               const i64 *off, const i64 *flat, i64 s, i64 t, i64 *level,
-               i64 *queue) {
-    for (i64 i = 0; i < n; i++) level[i] = -1;
-    i64 qh = 0, qt = 0;
-    level[s] = 0;
-    queue[qt++] = s;
-    while (qh < qt) {
-        i64 u = queue[qh++];
-        i64 lu = level[u] + 1;
-        for (i64 j = off[u]; j < off[u + 1]; j++) {
-            i64 e = flat[j];
-            i64 v = ev[e];
-            if (level[v] < 0 && ecap[e] > eflow[e]) {
-                level[v] = lu;
-                queue[qt++] = v;
-            }
-        }
-    }
-    return level[t] >= 0;
-}
-
-/* Dinic with iterative current-arc DFS blocking flow.
-   Returns the max-flow value; eflow holds the final flow and level the
-   final (failing) BFS levels, i.e. residual reachability from s. */
-i64 dinic_maxflow(i64 n, const i64 *ev, const i64 *ecap, i64 *eflow,
-                  const i64 *off, const i64 *flat, i64 s, i64 t,
-                  i64 *level) {
-    i64 *queue = (i64 *)malloc((size_t)n * sizeof(i64));
-    i64 *it = (i64 *)malloc((size_t)n * sizeof(i64));
-    i64 *stack_v = (i64 *)malloc((size_t)(n + 1) * sizeof(i64));
-    i64 *stack_e = (i64 *)malloc((size_t)(n + 1) * sizeof(i64));
-    if (!queue || !it || !stack_v || !stack_e) {
-        free(queue); free(it); free(stack_v); free(stack_e);
-        return -1;
-    }
-    i64 total = 0;
-    while (bfs(n, ev, ecap, eflow, off, flat, s, t, level, queue)) {
-        for (i64 i = 0; i < n; i++) it[i] = off[i];
-        for (;;) {
-            /* one current-arc DFS attempt for an augmenting path */
-            i64 top = 0;
-            stack_v[0] = s;
-            int found = 0;
-            while (top >= 0) {
-                i64 u = stack_v[top];
-                if (u == t) { found = 1; break; }
-                int advanced = 0;
-                i64 nxt = level[u] + 1;
-                for (; it[u] < off[u + 1]; it[u]++) {
-                    i64 e = flat[it[u]];
-                    i64 v = ev[e];
-                    if (level[v] == nxt && ecap[e] > eflow[e]) {
-                        stack_e[top + 1] = e;
-                        stack_v[++top] = v;
-                        advanced = 1;
-                        break;
-                    }
-                }
-                if (!advanced) {
-                    level[u] = -2; /* dead-end kill */
-                    top--;
-                    if (top >= 0) it[stack_v[top]]++;
-                }
-            }
-            if (!found) break;
-            i64 f = ecap[stack_e[1]] - eflow[stack_e[1]];
-            for (i64 k = 2; k <= top; k++) {
-                i64 r = ecap[stack_e[k]] - eflow[stack_e[k]];
-                if (r < f) f = r;
-            }
-            for (i64 k = 1; k <= top; k++) {
-                i64 e = stack_e[k];
-                eflow[e] += f;
-                eflow[e ^ 1] -= f;
-            }
-            total += f;
-        }
-    }
-    free(queue); free(it); free(stack_v); free(stack_e);
-    return total;
-}
 
 /* Unit-capacity Dinic with IMPLICIT terminals: the artificial super
    source/sink and their INF arcs are never materialized. BFS seeds
@@ -279,11 +197,6 @@ def _build() -> "ctypes.CDLL":
                 except OSError:
                     pass
     lib = ctypes.CDLL(so)
-    lib.dinic_maxflow.restype = ctypes.c_int64
-    lib.dinic_maxflow.argtypes = [
-        ctypes.c_int64, _P, _P, _P, _P, _P,
-        ctypes.c_int64, ctypes.c_int64, _P,
-    ]
     lib.cc_min_label.restype = None
     lib.cc_min_label.argtypes = [ctypes.c_int64, ctypes.c_int64, _P, _P, _P]
     lib.dinic_unit_terminal.restype = ctypes.c_int64
@@ -298,13 +211,18 @@ def _lib():
     global _LIB, _TRIED
     if not _TRIED:
         _TRIED = True
-        if os.environ.get("TILER_NO_CDINIC"):
+        try:
+            _LIB = _build()
+        except (OSError, subprocess.SubprocessError) as exc:
+            stderr = getattr(exc, "stderr", None)
+            cause = stderr.decode(errors="replace").strip() if stderr else str(exc)
+            warnings.warn(
+                "compiled min-cut kernel unavailable, using the numpy "
+                f"fallback (about 20x slower): {cause}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
             _LIB = None
-        else:
-            try:
-                _LIB = _build()
-            except Exception:
-                _LIB = None
     return _LIB
 
 
@@ -314,36 +232,6 @@ def available() -> bool:
 
 def _ptr(a: np.ndarray) -> "ctypes._Pointer":
     return a.ctypes.data_as(_P)
-
-
-def dinic_maxflow_c(
-    n: int,
-    ev: np.ndarray,
-    ecap: np.ndarray,
-    eflow: np.ndarray,
-    off: np.ndarray,
-    flat: np.ndarray,
-    s: int,
-    t: int,
-) -> tuple[int, np.ndarray]:
-    """Run compiled Dinic over the extended-graph arrays (mutates
-    ``eflow`` in place). Returns (max_flow, final BFS level array with
-    -1/-2 = unreachable)."""
-    lib = _lib()
-    assert lib is not None
-    ev = np.ascontiguousarray(ev, dtype=np.int64)
-    ecap = np.ascontiguousarray(ecap, dtype=np.int64)
-    assert eflow.dtype == np.int64 and eflow.flags.c_contiguous
-    off = np.ascontiguousarray(off, dtype=np.int64)
-    flat = np.ascontiguousarray(flat, dtype=np.int64)
-    level = np.empty(n, dtype=np.int64)
-    mf = lib.dinic_maxflow(
-        n, _ptr(ev), _ptr(ecap), _ptr(eflow), _ptr(off), _ptr(flat),
-        s, t, _ptr(level),
-    )
-    if mf < 0:
-        raise MemoryError("cdinic: work-array allocation failed")
-    return int(mf), level
 
 
 def dinic_unit_terminal_c(

@@ -91,10 +91,9 @@ def best_inertial_cut(
             flags = np.zeros(n, dtype=bool)
             part_two, cut = n, 0
         else:
-            # production kernel: implicit-terminal compiled Dinic —
+            # compiled unit-terminal Dinic, or the numpy fallback —
             # bit-identical to the reference-shaped Dinic (flags are
-            # the unique minimal min cut for ANY max flow);
-            # TILER_KERNEL=dinic|pr|c switches engines for A/B
+            # the unique minimal min cut for ANY max flow)
             flags, part_two, cut, _ = min_cut(graph, sources, sinks)
         balance = abs(n // 2 - part_two)
         return ((cut, balance, job_idx), flags, part_two, cut, job_idx)

@@ -31,8 +31,6 @@ identical; we run full BFS, which vectorizes.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
 from ..config import INF_CAPACITY
@@ -158,7 +156,6 @@ class _ExtGraph:
         self.flat = flat  # edge ids, adjacency-concatenated
         self.eflow = np.zeros(len(eu), dtype=np.int64)
         self.level = np.full(n, INVALID_LEVEL, dtype=np.int64)
-        self.last = np.zeros(n, dtype=np.int64)
         # list-mirror caches for the blocking-flow hot loop
         self._ev_list = None
         self._ecap_list = None
@@ -238,7 +235,7 @@ def _blocking_flow_phase(g: _ExtGraph, s: int, t: int) -> int:
     flat2 = flat2_np.tolist()
     off2 = off2_np.tolist()
     level = level_np.tolist()
-    last = [0] * g.n
+    last = [0] * g.n  # resetCurrentEdges (dinic.go:126-130)
     pushed: list[int] = []
     deltas: list[int] = []
 
@@ -293,56 +290,6 @@ def _blocking_flow_phase(g: _ExtGraph, s: int, t: int) -> int:
     return total
 
 
-def _dfs_augment(g: _ExtGraph, s: int, t: int) -> int:
-    """Single-path variant kept for unit tests: runs one phase's first
-    augmenting path semantics via the same machinery. Mutates g.eflow
-    and g.level like the reference's dfsAugmentPath."""
-    lev_before = g.level.copy()
-    ev = g.ev.tolist()
-    ecap = g.ecap.tolist()
-    eflow = g.eflow.tolist()
-    off = g.off.tolist()
-    flat = g.flat.tolist()
-    level = g.level.tolist()
-    last = g.last.tolist()
-    stack = [s]
-    path: list[int] = []
-    f = 0
-    while stack:
-        u = stack[-1]
-        if u == t:
-            f = min(ecap[e] - eflow[e] for e in path)
-            for e in path:
-                eflow[e] += f
-                eflow[e ^ 1] -= f
-            break
-        nxt = level[u] + 1
-        base = off[u]
-        end = off[u + 1]
-        j = last[u]
-        advanced = False
-        while base + j < end:
-            e = flat[base + j]
-            v = ev[e]
-            if level[v] == nxt and ecap[e] > eflow[e]:
-                stack.append(v)
-                path.append(e)
-                advanced = True
-                break
-            j += 1
-        last[u] = j
-        if not advanced:
-            level[u] = INVALID_LEVEL
-            stack.pop()
-            if path:
-                path.pop()
-                last[stack[-1]] += 1
-    g.eflow[:] = eflow
-    g.level[:] = level
-    g.last[:] = last
-    return f
-
-
 def dinic_unit_terminal_min_cut(
     base: FlowGraph, sources: np.ndarray, sinks: np.ndarray
 ) -> tuple[np.ndarray, int, int, None]:
@@ -351,11 +298,12 @@ def dinic_unit_terminal_min_cut(
     reused by every direction job, so a job costs zero numpy graph
     construction — the per-job ``extended()``/contraction rebuilds were
     a co-dominant cost of big finish kernels once the flow search
-    itself was compiled. Flags/value are the engine-independent minimal
-    min cut (same argument as dinic_min_cut_c); terminals must be
-    disjoint (guaranteed by the 25%-extremes selection). Returns None
-    in the graph slot — flow state stays inside the C call; use the
-    explicit engines when ``validate_min_cut`` is needed."""
+    itself was compiled. The flow value is unique and the flags are the
+    unique minimal min cut of any max flow, so the result equals
+    ``dinic_min_cut`` bit for bit; terminals must be disjoint
+    (guaranteed by the 25%-extremes selection). Returns None in the
+    graph slot — flow state stays inside the C call; use the explicit
+    engines when ``validate_min_cut`` is needed."""
     from . import cdinic
 
     off, flat = base.base_csr()
@@ -368,26 +316,6 @@ def dinic_unit_terminal_min_cut(
     flags = level >= 0
     part_two = int(base.n) - int(flags.sum())
     return flags, part_two, max_flow, None
-
-
-def dinic_min_cut_c(
-    base: FlowGraph, sources: np.ndarray, sinks: np.ndarray
-) -> tuple[np.ndarray, int, int, "_ExtGraph"]:
-    """Compiled-Dinic twin of ``dinic_min_cut`` (kernel/cdinic.py):
-    identical CSR order, current-arc semantics and final-BFS flags, so
-    the result is bit-identical — and engine-independent anyway (unique
-    flow value; flags = the unique minimal min cut of any max flow)."""
-    from . import cdinic
-
-    g = base.extended(sources, sinks)
-    s, t = base.n, base.n + 1
-    max_flow, level = cdinic.dinic_maxflow_c(
-        g.n, g.ev, g.ecap, g.eflow, g.off, g.flat, s, t
-    )
-    g.level[:] = np.where(level >= 0, level, INVALID_LEVEL)
-    flags = g.level[: base.n] != INVALID_LEVEL
-    part_two = int(base.n) - int(flags.sum())
-    return flags, part_two, max_flow, g
 
 
 def dinic_min_cut(
@@ -403,7 +331,6 @@ def dinic_min_cut(
     s, t = base.n, base.n + 1
     max_flow = 0
     while True:
-        g.last.fill(0)  # resetCurrentEdges (dinic.go:126-130)
         if _bfs_levels(g, s, t):
             max_flow += _blocking_flow_phase(g, s, t)
         else:
@@ -531,6 +458,11 @@ def _sequential_discharge(
     return not q
 
 
+#: initial per-s-arc flood cap of ``push_relabel_min_cut``; an arc that
+#: drains saturated below its full cap grows 8x and re-floods
+PR_START_CAP = 128
+
+
 def push_relabel_min_cut(
     base: FlowGraph, sources: np.ndarray, sinks: np.ndarray
 ) -> tuple[np.ndarray, int, int, "_ExtGraph"]:
@@ -564,8 +496,8 @@ def push_relabel_min_cut(
     max-flow value are untouched — while the initial excess flood stays
     O(E) instead of O(INF).
 
-    Progressive source caps (round 6): the flood is further capped at
-    ``TILER_PR_CAP0`` (default 128) per s-arc initially. All flow
+    Progressive source caps: the flood is further capped at
+    ``PR_START_CAP`` per s-arc initially. All flow
     enters through the s-arcs, so the capped network's max-flow value
     is min(sum caps, F); when the drained preflow leaves an s-arc
     SATURATED below its full (outcap + 1) cap, the cap may have been
@@ -591,11 +523,10 @@ def push_relabel_min_cut(
     # bounded by the progressive starting cap
     ns = len(sources)
     s_arcs = m0 + 2 * np.arange(ns, dtype=np.int64)
-    cap0 = int(os.environ.get("TILER_PR_CAP0", "128"))
     if ns:
         real_outcap = np.bincount(eu[:m0], minlength=n)
         cap_full = real_outcap[np.asarray(sources, dtype=np.int64)] + 1
-        ecap[s_arcs] = np.minimum(cap_full, max(cap0, 1))
+        ecap[s_arcs] = np.minimum(cap_full, PR_START_CAP)
 
     h = np.zeros(n, dtype=np.int64)
     ex = np.zeros(n, dtype=np.int64)
@@ -739,7 +670,6 @@ def contracted_min_cut(
     base: FlowGraph,
     sources: np.ndarray,
     sinks: np.ndarray,
-    engine=None,
 ) -> tuple[np.ndarray, int, int, "_ExtGraph"]:
     """Source/sink-set contraction + vectorized push-relabel — the
     vectorized counterpart of the reference's border-nodes variant
@@ -781,9 +711,7 @@ def contracted_min_cut(
     heads = vmap[base.ev[0::2]]
     keep = tails != heads
     cbase = FlowGraph.from_directed_edges(n_in + 2, tails[keep], heads[keep])
-    if engine is None:
-        engine = push_relabel_min_cut
-    cflags, _cp2, max_flow, g = engine(
+    cflags, _cp2, max_flow, g = push_relabel_min_cut(
         cbase, np.array([S], dtype=np.int64), np.array([T], dtype=np.int64)
     )
     flags = np.empty(n, dtype=bool)
@@ -802,24 +730,17 @@ SMALL_CUT_THRESHOLD = 8192
 
 def min_cut(
     base: FlowGraph, sources: np.ndarray, sinks: np.ndarray
-) -> tuple[np.ndarray, int, int, "_ExtGraph"]:
-    """Production kernel selector: results identical for every engine
-    by construction (see contracted_min_cut / dinic_min_cut_c).
-    Default 'auto' prefers the source/sink-contracted COMPILED Dinic
-    (kernel/cdinic.py — ~50x the numpy engines on the high-diameter
-    cells this partitioner cuts) and falls back to the round-5
-    size-dispatched numpy pair when no C toolchain is available.
-    TILER_KERNEL=dinic|pr|c forces one implementation for A/B runs."""
+) -> tuple[np.ndarray, int, int, "_ExtGraph | None"]:
+    """Production min cut; every engine returns the same result by
+    construction (the unique flow value and minimal min cut). Uses the
+    compiled unit-terminal Dinic when ``cdinic.available()``; otherwise
+    the numpy fallback, Python Dinic below ``SMALL_CUT_THRESHOLD`` and
+    contracted push-relabel above it."""
     from . import cdinic
 
-    mode = os.environ.get("TILER_KERNEL", "auto")
-    if mode == "auto" and cdinic.available():
-        mode = "cfast"
-    if mode == "cfast":
+    if cdinic.available():
         return dinic_unit_terminal_min_cut(base, sources, sinks)
-    if mode == "c":
-        return contracted_min_cut(base, sources, sinks, engine=dinic_min_cut_c)
-    if mode == "dinic" or (mode == "auto" and base.n < SMALL_CUT_THRESHOLD):
+    if base.n < SMALL_CUT_THRESHOLD:
         return dinic_min_cut(base, sources, sinks)
     return contracted_min_cut(base, sources, sinks)
 

@@ -107,14 +107,7 @@ METRICS_SCHEMA = (
 #: direction-parallel), so executor memory is never exceeded: a
 #: 128k-vertex finish task peaks well under the 2^20-vertex
 #: executor-memory design bound.
-DEFAULT_LOCAL_RECURSION_THRESHOLD = int(
-    os.environ.get("TILER_FINISH_THRESHOLD", 1 << 16)
-)
-
-#: set TILER_FINISH_PROMOTE=0 to disable the borderline-cell promote
-#: rule (below) — measurement knob so one binary can A/B the round-4
-#: round structure against the round-5 one in the same window.
-PROMOTE_ENABLED = os.environ.get("TILER_FINISH_PROMOTE", "1") != "0"
+DEFAULT_LOCAL_RECURSION_THRESHOLD = 1 << 16
 
 #: promote-rule cap: borderline big cells are promoted to an in-kernel
 #: finish only when the largest of them is below cap * threshold. With
@@ -127,7 +120,7 @@ PROMOTE_ENABLED = os.environ.get("TILER_FINISH_PROMOTE", "1") != "0"
 #: parallel ~3s finish tasks (same-window A/B in OPTIMIZATION_r06.md).
 #: Never promotes a cell that could stress executor memory: 2.5x the
 #: 64k threshold is ~16% of the 2^20-vertex per-executor design bound.
-PROMOTE_CAP = float(os.environ.get("TILER_PROMOTE_CAP", "2.5"))
+PROMOTE_CAP = 2.5
 
 
 #: ``_exclusive_cumsum_by_key`` prefix-sums a frame the caller bounds at
@@ -686,20 +679,17 @@ def _run_level(
             )
             small_rows = [r for r in act_rows if r[2] < local_threshold]
             big_rows = [r for r in act_rows if r[2] >= local_threshold]
-            # promote rule: when every remaining big cell is < 2x the
-            # finish threshold, one more distributed bisection round
-            # would only produce children that all finish locally next
-            # round — skip the round and finish the borderline cells
-            # in-kernel now (straggler bound: a 2x-threshold task).
+            # promote rule: when every remaining big cell is below
+            # PROMOTE_CAP x the finish threshold, one more distributed
+            # bisection round would only produce children that finish
+            # locally next round — skip the round and finish the
+            # borderline cells in-kernel now (straggler bound: a
+            # PROMOTE_CAP x threshold task).
             # Collapses the trailing dribble of the bisection prefix
             # (50k docs: rounds/level 6 -> 4 measured at the default
             # threshold) without ever promoting a cell that could
             # stress executor memory.
-            if (
-                PROMOTE_ENABLED
-                and big_rows
-                and max(r[2] for r in big_rows) < PROMOTE_CAP * local_threshold
-            ):
+            if big_rows and max(r[2] for r in big_rows) < PROMOTE_CAP * local_threshold:
                 small_rows, big_rows = act_rows, []
             n_big = len(big_rows)
             n_small = len(small_rows)
@@ -729,11 +719,7 @@ def _run_level(
             )
             n_big = int(agg["n_big"] or 0)
             n_small = n_active - n_big
-            if (
-                PROMOTE_ENABLED
-                and n_big
-                and int(agg["max_n"]) < PROMOTE_CAP * local_threshold
-            ):
+            if n_big and int(agg["max_n"]) < PROMOTE_CAP * local_threshold:
                 # promote rule (see the mirror path above): borderline
                 # big cells finish in-kernel instead of costing a round
                 n_big, n_small = 0, n_active

@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """Max-flow kernel micro-benchmark: one direction job on a synthetic
-geometric kNN graph at the bench's root-cell scale (n ~ 125k). Compares
-available min-cut kernels for identical (flags, part_two, max_flow).
+geometric kNN graph at the bench's root-cell scale (n ~ 125k). Times the
+production ``min_cut`` (the compiled kernel when it builds, else the
+numpy fallback) beside the numpy engines, and checks that all of them
+return identical (flags, part_two, max_flow).
 
     python scripts/kernel_bench.py [n] [k]
 """
@@ -16,9 +18,13 @@ import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from osm_inertial_flow_partitioner_spark.kernel import cdinic  # noqa: E402
 from osm_inertial_flow_partitioner_spark.kernel.maxflow import (  # noqa: E402
     FlowGraph,
+    contracted_min_cut,
     dinic_min_cut,
+    min_cut,
+    push_relabel_min_cut,
 )
 
 
@@ -77,12 +83,9 @@ def main() -> None:
     sources = order[:kk]
     sinks = order[::-1][:kk]
 
-    from osm_inertial_flow_partitioner_spark.kernel.maxflow import (
-        contracted_min_cut,
-        push_relabel_min_cut,
-    )
-
+    engine = "compiled" if cdinic.available() else "numpy fallback"
     kernels = {
+        f"min_cut ({engine})": min_cut,
         "dinic": dinic_min_cut,
         "push_relabel": push_relabel_min_cut,
         "contracted_pr": contracted_min_cut,

@@ -63,16 +63,50 @@ def test_recursive_bisection_dag_pool_matches_serial():
             )
         )
     for other in others:
-        assert len(other.cells) == len(serial.cells)
-        for a, b in zip(serial.cells, other.cells):
-            assert np.array_equal(a, b)
-        assert [
-            (s.n, s.cut_edges, s.part_two, s.best_job, s.round)
-            for s in other.stats
-        ] == [
-            (s.n, s.cut_edges, s.part_two, s.best_job, s.round)
-            for s in serial.stats
-        ]
+        _assert_same_bisection(other, serial)
+
+
+def _assert_same_bisection(got, want):
+    assert len(got.cells) == len(want.cells)
+    for a, b in zip(want.cells, got.cells):
+        assert np.array_equal(a, b)
+    assert [
+        (s.n, s.cut_edges, s.part_two, s.best_job, s.round) for s in got.stats
+    ] == [
+        (s.n, s.cut_edges, s.part_two, s.best_job, s.round) for s in want.stats
+    ]
+
+
+def test_numpy_fallback_dispatch_matches_compiled(monkeypatch):
+    """Without the compiled kernel, ``min_cut`` cuts the root (above
+    ``SMALL_CUT_THRESHOLD``) with contracted push-relabel and its
+    children (below it) with Python Dinic; the cells and stats equal
+    the compiled run's. Only the comparison needs a C toolchain."""
+    from osm_inertial_flow_partitioner_spark.kernel import cdinic, maxflow
+
+    v, e = road_like_graph(10_000, seed=5)
+    args = (v["ids"], v["lat"], v["lon"], e["tail"], e["head"], 4096)
+    compiled = recursive_bisection(*args) if cdinic.available() else None
+
+    monkeypatch.setattr(cdinic, "_lib", lambda: None)
+    cut_sizes = {"dinic_min_cut": [], "contracted_min_cut": []}
+    for name, sizes in cut_sizes.items():
+        def spy(base, sources, sinks, _engine=getattr(maxflow, name), _sizes=sizes):
+            _sizes.append(base.n)
+            return _engine(base, sources, sinks)
+
+        monkeypatch.setattr(maxflow, name, spy)
+    fallback = recursive_bisection(*args)
+
+    small, large = cut_sizes["dinic_min_cut"], cut_sizes["contracted_min_cut"]
+    assert large and min(large) >= maxflow.SMALL_CUT_THRESHOLD
+    assert small and max(small) < maxflow.SMALL_CUT_THRESHOLD
+    assert all(len(c) < 4096 for c in fallback.cells)
+    assert np.array_equal(
+        np.sort(np.concatenate([c for c in fallback.cells if len(c)])), v["ids"]
+    )
+    if compiled is not None:
+        _assert_same_bisection(fallback, compiled)
 
 
 def test_aligned_coords_must_match_vertex_count():
